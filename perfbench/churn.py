@@ -1,11 +1,13 @@
 """``churn``: writes beside reads on a persisted IVF-PQ index.
 
 A seeded set of clustered 64-dim vectors is indexed with
-``build_ivfpq_index``; then each round appends new vectors, tombstones
-live ones and probes a held-out query batch.  One
-``maintenance.compact_ivfpq_index`` runs at the end.  Probe results are
-checked against the live set and scored against exact cosine search in
-numpy.
+``build_ivfpq_index`` in the cold round; then each warm round appends
+new vectors, tombstones live ones and probes a held-out query batch.
+The index takes the library's default geometry for its size, as every
+caller in the repo does.  Traced runs end with one
+``maintenance.compact_ivfpq_index``.  Probe results are checked against
+the live set and scored against exact cosine search in numpy; a probe
+whose recall falls below ``RECALL_FLOOR`` fails.
 """
 
 from __future__ import annotations
@@ -18,25 +20,25 @@ from harness import collect_df, median
 
 DIM = 64
 CLUSTERS = 16
-N_BASE = 1000
+N_BASE = 500
 N_APPEND = 250
 N_DELETE = 100
 N_QUERIES = 100
 K = 5
+#: lowest recall@5 a probe may score.  Over 36 seeds from 1 to 40, the
+#: probe after one warm round scored 0.95 to 0.99, and after two rounds
+#: no lower than 0.94.  The floor sits below that, so that seeds not
+#: tried pass and a probe that gives up recall for speed fails
+RECALL_FLOOR = 0.9
 INDEX = "perfbench_churn"
-#: Index geometry.  The library picks 40 lists, 40 codebook entries,
-#: three training passes and 32 buckets for 1,000 vectors, which makes
-#: the build take about 30 s here; this geometry keeps the shape (coarse
-#: lists, residual PQ codes, bucketed tables) at about half of that.
-GEOMETRY = dict(n_centroids=16, n_entries=16, iters=1, n_buckets=8)
-KINDS = ("build", "append", "delete", "probe")
 WARM_KINDS = ("append", "delete", "probe")
 
 
 class Churn:
     name = "churn"
-    cold_kinds = KINDS
+    cold_kinds = ("build",)
     warm_kinds = WARM_KINDS
+    warm_rounds = 1
 
     def __init__(self, work_dir: str, seed: int, tracer):
         self.work_dir = work_dir
@@ -47,7 +49,7 @@ class Churn:
 
     # ------------------------------------------------------------ inputs
 
-    def prepare(self, rep: int) -> None:
+    def prepare(self) -> None:
         """Draw the clustered vectors and the held-out queries."""
         self.rng = np.random.default_rng(self.seed)
         self.centers = self.rng.normal(size=(CLUSTERS, DIM))
@@ -60,10 +62,8 @@ class Churn:
         return (x + 0.35 * self.rng.normal(size=(n, DIM))).astype(np.float32)
 
     def verify_inputs(self) -> dict:
-        self.query_df = self._frame(self.queries, 0, "query_id")
         return {"vectors": N_BASE, "dim": DIM, "append_per_round": N_APPEND,
-                "delete_per_round": N_DELETE, "queries": N_QUERIES,
-                "geometry": GEOMETRY}
+                "delete_per_round": N_DELETE, "queries": N_QUERIES}
 
     def _frame(self, x: np.ndarray, first_id: int, id_col: str = "vec_id"):
         rows = [(first_id + i, v.tolist()) for i, v in enumerate(x)]
@@ -77,7 +77,7 @@ class Churn:
         df = self._frame(self.vectors, 0)
         return lambda: self._call(
             "operators.similarity.build_ivfpq_index",
-            build_ivfpq_index, self.spark, df, INDEX, **GEOMETRY,
+            build_ivfpq_index, self.spark, df, INDEX,
         )
 
     def _call(self, span: str, fn, *args, **kwargs):
@@ -93,6 +93,8 @@ class Churn:
 
         if rnd == 0:
             ops.run("build", self._build())
+            self.query_df = self._frame(self.queries, 0, "query_id")
+            return
         new = self._draw(N_APPEND)
         delta = self._frame(new, len(self.vectors))
         ok = ops.run("append", lambda: self._call(
@@ -130,7 +132,10 @@ class Churn:
         dead = ids[~self.live[ids]]
         if dead.size:
             return f"{dead.size} results are tombstoned ids, e.g. {int(dead[0])}"
-        self.recalls.append(self._recall(got))
+        recall = self._recall(got)
+        self.recalls.append(recall)
+        if recall < RECALL_FLOOR:
+            return f"recall@{K} {recall:.3f} below the floor {RECALL_FLOOR}"
         return None
 
     def _recall(self, got: dict) -> float:
@@ -145,22 +150,24 @@ class Churn:
         return hits / (N_QUERIES * K)
 
     def finish(self, ops) -> None:
-        """Compact the index; traced, record its storage first, with the
-        tombstones still pending."""
+        """Traced only: record the index storage, with the tombstones
+        still pending, then compact the index.  No end-to-end metric
+        reads the compaction, so untraced runs skip it."""
         from hadoop_logfile_inputformat_spark.operators import maintenance
 
+        if not self.tracer.enabled:
+            return
         n_live = int(self.live.sum())
-        if self.tracer.enabled:
-            info = maintenance.index_info(self.spark, INDEX)
-            tables = info["tables"]
-            self.storage = {
-                "index.bytes_per_vector": sum(
-                    t["bytes"] for t in tables.values() if t["corpus_sized"]) / n_live,
-                "index.codes_files": tables[f"{INDEX}_codes"]["files"],
-                "index.tombstone_files": len(data_files(
-                    os.path.join(self.work_dir, "warehouse", f"{INDEX}_tombstones"))),
-                "index.pending_tombstones": info["pending_tombstones"],
-            }
+        info = maintenance.index_info(self.spark, INDEX)
+        tables = info["tables"]
+        self.storage = {
+            "index.bytes_per_vector": sum(
+                t["bytes"] for t in tables.values() if t["corpus_sized"]) / n_live,
+            "index.codes_files": tables[f"{INDEX}_codes"]["files"],
+            "index.tombstone_files": len(data_files(
+                os.path.join(self.work_dir, "warehouse", f"{INDEX}_tombstones"))),
+            "index.pending_tombstones": info["pending_tombstones"],
+        }
 
         def check(_):
             self.spark.catalog.refreshTable(f"{INDEX}_quantized")
@@ -181,9 +188,11 @@ class Churn:
         ``(name, value, unit, samples)``."""
         return [
             ("churn.build_s", ops.first("build"), "s", 1),
-            *((f"churn.{k}_p50_s", median(ops.later(k)), "s", len(ops.later(k)))
+            *((f"churn.{k}_p50_s", median(ops.warm(k)), "s", len(ops.warm(k)))
               for k in WARM_KINDS),
             ("churn.recall_at_5", self.recalls[-1] if self.recalls else 0.0, "ratio",
+             len(self.recalls)),
+            ("churn.recall_at_5.min", min(self.recalls, default=0.0), "ratio",
              len(self.recalls)),
         ]
 
@@ -199,7 +208,7 @@ class Churn:
                 trees = [tracer.subtree(r) for r in roots]
                 out[f"{prefix}_py4j_calls"] = median([sum(s["py4j"] for s in t) for t in trees])
                 out[f"{prefix}_jobs"] = median([sum(s["jobs"] for s in t) for t in trees])
-        probes = [tracer.subtree(r) for r in tracer.ops_of("probe")[1:]]
+        probes = [tracer.subtree(r) for r in tracer.ops_of("probe")]
         if probes:
             def pick(tree, name, key):
                 return sum(s.get(key, 0) for s in tree if s["name"] == name)

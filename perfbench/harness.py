@@ -55,30 +55,6 @@ def start_session(app_name: str):
     return spark
 
 
-def set_up(app_name: str, prepare, reps: int, process_t0: float):
-    """Set the workload up ``reps`` times: (re)start the session, run the
-    warm-up job and write the inputs with ``prepare(rep)``.  The first
-    set-up launches the JVM; later ones stop the session and start a new
-    one in the same JVM.  Returns ``(spark, inputs, times, first_start_s,
-    first_setup_s)``; only the last set-up's session and inputs are used.
-    """
-    spark, inputs, times = None, None, []
-    first_start = first_setup = 0.0
-    for rep in range(reps):
-        t0 = time.perf_counter()
-        if spark is not None:
-            spark.stop()
-        spark = start_session(app_name)
-        t1 = time.perf_counter()
-        inputs = prepare(rep)
-        t2 = time.perf_counter()
-        times.append(t2 - t0)
-        if rep == 0:
-            first_start = t1 - t0
-            first_setup = t2 - process_t0
-    return spark, inputs, times, first_start, first_setup
-
-
 def shut_down(spark) -> None:
     """Stop the session and the JVM, and wait until the JVM has exited."""
     from pyspark import SparkContext
@@ -130,6 +106,9 @@ class Ops:
     def __init__(self, tracer: "Tracer"):
         self.tracer = tracer
         self.samples: dict = {}
+        self.rounds: dict = {}
+        #: the round the next calls belong to; ``None`` outside the rounds
+        self.round = None
         self.attempted = 0
         self.failures: list = []
 
@@ -149,6 +128,7 @@ class Ops:
             self._fail(kind, exc)
             return None
         self.samples.setdefault(kind, []).append(time.perf_counter() - t0)
+        self.rounds.setdefault(kind, []).append(self.round)
         if check is not None:
             try:
                 problem = check(out)
@@ -168,8 +148,10 @@ class Ops:
         xs = self.samples.get(kind) or [float("nan")]
         return xs[0]
 
-    def later(self, kind: str) -> list:
-        return self.samples.get(kind, [])[1:]
+    def warm(self, kind: str) -> list:
+        """Calls of ``kind`` made in the warm rounds, i.e. after round 0."""
+        return [t for t, r in zip(self.samples.get(kind, []), self.rounds.get(kind, []))
+                if r is not None and r > 0]
 
 
 # ---------------------------------------------------------------- tracing

@@ -14,17 +14,23 @@ from __future__ import annotations
 import gzip
 import os
 import re
-import shutil
 import time
 from collections import Counter
 
+from hadoop_logfile_inputformat_spark.testing.loggen import (
+    FORMAT_A,
+    FORMAT_B,
+    replay_log_corpus_records,
+    summarize_log_corpus,
+    write_log_corpus,
+)
 from harness import collect_df, median
 
 N_FILES = 8
-#: simulated seconds per day-file at one record per 5 ms: 18,000 records
-#: and about 1.7 MB per file, so the corpus is about 13 MB and 144,000
+#: simulated seconds per day-file at one record per 5 ms: 9,000 records
+#: and about 0.83 MB per file, so the corpus is about 6.6 MB and 72,000
 #: records, decompressed
-SECONDS_PER_FILE = 90.0
+SECONDS_PER_FILE = 45.0
 SAMPLE_FRACTION = 0.01
 KINDS = (
     "count_by_level_plain",
@@ -41,6 +47,7 @@ class Logscan:
     name = "logscan"
     cold_kinds = KINDS
     warm_kinds = KINDS
+    warm_rounds = 1
 
     def __init__(self, work_dir: str, seed: int, tracer):
         self.work_dir = work_dir
@@ -51,14 +58,10 @@ class Logscan:
 
     # ------------------------------------------------------------ inputs
 
-    def prepare(self, rep: int) -> None:
+    def prepare(self) -> None:
         """Write the seeded corpus (``.log`` plus byte-identical
         ``.log.gz`` twins) into a fresh directory."""
-        from hadoop_logfile_inputformat_spark.testing.loggen import write_log_corpus
-
-        if rep:
-            shutil.rmtree(self.corpus)
-        self.corpus = os.path.join(self.work_dir, f"corpus{rep}")
+        self.corpus = os.path.join(self.work_dir, "corpus")
         _, path_formats, paths = write_log_corpus(
             self.corpus, n_files=N_FILES, seconds_per_file=SECONDS_PER_FILE,
             seed=self.seed,
@@ -69,11 +72,6 @@ class Logscan:
     def verify_inputs(self) -> dict:
         """Golden counts, recomputed by replaying the generator without
         reading the files."""
-        from hadoop_logfile_inputformat_spark.testing.loggen import (
-            replay_log_corpus_records,
-            summarize_log_corpus,
-        )
-
         kw = dict(n_files=N_FILES, seconds_per_file=SECONDS_PER_FILE, seed=self.seed)
         golden = summarize_log_corpus(**kw)
         self.golden = dict(golden.by_level)
@@ -89,8 +87,6 @@ class Logscan:
     # ------------------------------------------------------------ jobs
 
     def _patterns(self) -> dict:
-        from hadoop_logfile_inputformat_spark.testing.loggen import FORMAT_A, FORMAT_B
-
         return {name: FORMAT_A if f == "A" else FORMAT_B for name, f in self.formats.items()}
 
     def _read(self, glob: str):
@@ -136,7 +132,6 @@ class Logscan:
 
     def _sample(self, rnd: int) -> str:
         from hadoop_logfile_inputformat_spark.operators.logparity import sample_logs
-        from hadoop_logfile_inputformat_spark.testing.loggen import FORMAT_A
 
         out = os.path.join(self.work_dir, f"sample{rnd}")
         with self.tracer.span("operators.logparity.sample_logs"):
@@ -146,7 +141,7 @@ class Logscan:
             )
         return out
 
-    def _stream(self, rnd: int):
+    def _stream(self, rnd: int, **options):
         from hadoop_logfile_inputformat_spark.functions.logparse import parse_log_records
         from hadoop_logfile_inputformat_spark.streaming.logfile_stream import (
             register_logfile_stream_source,
@@ -154,11 +149,7 @@ class Logscan:
 
         with self.tracer.span("streaming.logfile_stream.catchup"):
             register_logfile_stream_source(self.spark)
-            reader = self.spark.readStream.format("logfile-stream")
-            # the day-files are closed, so a tail is final the moment it
-            # is seen; the default of 2 stable polls would hold back each
-            # file's last record under availableNow
-            reader = reader.option("tailStableBatches", 0)
+            reader = self.spark.readStream.format("logfile-stream").options(**options)
             for name, pat in self._patterns().items():
                 reader = reader.option(f"pattern.{name}", pat)
             stream = reader.load(os.path.join(self.corpus, "*.log"))
@@ -214,7 +205,11 @@ class Logscan:
         ops.run("stack_hotspots", self._hotspots, self._check_hotspots)
         ops.run("pruned_count", self._pruned_count, self._check_pruned)
         ops.run("sample_write", lambda: self._sample(rnd), self._check_sample)
-        ops.run("stream_catchup", lambda: self._stream(rnd), self._check_stream)
+        # the day-files are closed, so a tail is final the moment it is
+        # seen; ``StreamDefault`` runs the catch-up with the default
+        # options, under which it comes out short
+        ops.run("stream_catchup", lambda: self._stream(rnd, tailStableBatches=0),
+                self._check_stream)
 
     def finish(self, ops) -> None:
         pass
@@ -222,8 +217,8 @@ class Logscan:
     def report(self, ops) -> list:
         """The workload's named end-to-end figures, as
         ``(name, value, unit, samples)``."""
-        warm_jobs = [x for k in KINDS for x in ops.later(k)]
-        rounds = min(len(ops.later(k)) for k in KINDS)
+        warm_jobs = [x for k in KINDS for x in ops.warm(k)]
+        rounds = min(len(ops.warm(k)) for k in KINDS)
         # decompressed MB a round scans: the pruned count reads one file,
         # the five other jobs the whole corpus
         round_mb = self.mb * 5 + self.mb / N_FILES
@@ -240,7 +235,7 @@ class Logscan:
         """Traced run only: the logfile rows of the per-layer table, from
         the job medians of the rounds."""
         return {
-            f"{layer}_s": median(ops.later(kind)) for layer, kind in (
+            f"{layer}_s": median(ops.warm(kind)) for layer, kind in (
                 ("logparse.count_by_level_plain", "count_by_level_plain"),
                 ("logparse.count_by_level_gz", "count_by_level_gz"),
                 ("udtfs.hotspots", "stack_hotspots"),
@@ -255,7 +250,6 @@ class Logscan:
         without Spark, a raw count, and the count of a one-record file,
         which is the fixed cost of a job."""
         from hadoop_logfile_inputformat_spark.sources.logfile import LogfileReader
-        from hadoop_logfile_inputformat_spark.testing.loggen import FORMAT_A
 
         out = {"stream.batches": self.stream_batches}
         opts = {"path": os.path.join(self.corpus, "*.log")}
@@ -277,17 +271,44 @@ class Logscan:
         return out
 
 
+class StreamDefault(Logscan):
+    """``stream_default``: the ``availableNow`` catch-up of ``logscan``
+    with the stream's default options, checked against the same golden
+    counts.
+
+    Known to fail on the current code.  With the default
+    ``tailStableBatches`` of 2, a file's last record is emitted only
+    once its size has stayed the same over two polls.  An
+    ``availableNow`` query plans its end offsets from one poll, so the
+    last record of every day-file is held back and the counts come out
+    one record short per file.  The regression gate leaves this workload
+    out, since every run of it fails; running every workload, or this
+    one, exits non-zero until the source emits those records.
+    """
+
+    name = "stream_default"
+    cold_kinds = warm_kinds = ("stream_catchup_default",)
+
+    def round(self, ops, rnd: int) -> None:
+        ops.run("stream_catchup_default", lambda: self._stream(rnd), self._check_stream)
+
+    def report(self, ops) -> list:
+        warm = ops.warm("stream_catchup_default")
+        return [("stream_default.catchup_p50_s", median(warm), "s", len(warm))]
+
+    def layer_report(self, ops, tracer) -> dict:
+        return {}
+
+    def probe_layers(self, ops) -> dict:
+        return {"stream.batches": self.stream_batches}
+
+
 def core_scan_rates(work_dir: str, seed: int) -> dict:
     """One-process scanner rates, no Spark, on one seeded day-file and
     its gzip twin: the single-threaded baseline for the Spark scan."""
     from hadoop_logfile_inputformat_spark.sources.logfile import (
         iter_record_lists_chunked,
         scan_partition_arrow,
-    )
-    from hadoop_logfile_inputformat_spark.testing.loggen import (
-        FORMAT_A,
-        FORMAT_B,
-        write_log_corpus,
     )
 
     summary, formats, paths = write_log_corpus(

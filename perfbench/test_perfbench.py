@@ -17,6 +17,9 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 sys.path.insert(0, HERE)
 
+import numpy as np  # noqa: E402
+
+import churn  # noqa: E402
 import harness  # noqa: E402
 import run  # noqa: E402
 
@@ -38,6 +41,15 @@ def test_ops_counts_raising_ops_and_failed_checks():
     assert [f["op"] for f in ops.failures] == ["a", "b", "c"]
     assert ops.failures[1]["error"].startswith("ZeroDivisionError")
     assert len(ops.samples["a"]) == 2 and "b" not in ops.samples
+
+
+def test_warm_calls_are_those_of_the_rounds_after_the_cold_one():
+    ops = harness.Ops(harness.Tracer(False))
+    for rnd in (0, 1, 2, None):
+        ops.round = rnd
+        ops.run("a", lambda: None)
+    assert len(ops.samples["a"]) == 4
+    assert ops.warm("a") == ops.samples["a"][1:3]
 
 
 def test_tracer_self_time_excludes_children_and_spans_share_the_op():
@@ -63,6 +75,8 @@ def test_disabled_tracer_records_nothing():
 
 
 class _Sleeper:
+    warm_rounds = 1
+
     def __init__(self, step):
         self.step, self.calls = step, []
 
@@ -79,6 +93,9 @@ def test_rounds_stop_before_the_window_is_overrun():
     wl = _Sleeper(0.05)
     run._rounds(wl, harness.Ops(tr), tr, seconds=0.0)
     assert wl.calls == [0, 1]
+    wl.warm_rounds, wl.calls = 3, []
+    run._rounds(wl, harness.Ops(tr), tr, seconds=0.0)
+    assert wl.calls == [0, 1, 2, 3]
 
 
 def test_traced_rounds_alternate_and_keep_one_of_each():
@@ -86,6 +103,24 @@ def test_traced_rounds_alternate_and_keep_one_of_each():
     rounds = run._rounds(wl, harness.Ops(tr), tr, seconds=0.0)
     assert [on for on, _ in rounds] == [True, False, True]
     assert tr.enabled
+
+
+def _probe_rows(ids):
+    return [{"query_id": q, "rank": r, "neighbor_id": int(i)}
+            for q, row in enumerate(ids) for r, i in enumerate(row)]
+
+
+def test_probe_check_scores_recall_and_fails_below_the_floor():
+    wl = churn.Churn("unused", 1, harness.Tracer(False))
+    wl.prepare()
+    x = wl.vectors.astype(np.float64)
+    q = wl.queries.astype(np.float64)
+    sims = (q / np.linalg.norm(q, axis=1, keepdims=True)) @ (
+        x / np.linalg.norm(x, axis=1, keepdims=True)).T
+    assert wl._check_probe(_probe_rows(np.argsort(-sims, axis=1)[:, :churn.K])) is None
+    assert wl.recalls == [1.0]
+    problem = wl._check_probe(_probe_rows(np.argsort(sims, axis=1)[:, :churn.K]))
+    assert "below the floor" in problem and wl.recalls[-1] < churn.RECALL_FLOOR
 
 
 def test_benchmark_json_meets_the_contract():
