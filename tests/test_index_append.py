@@ -687,47 +687,91 @@ def test_delete_ivfpq_probe_and_compaction_fold(spark):
         _drop(spark, "tdl_iq2", IVFPQ_SUFFIXES + tomb)
 
 
-def test_argmin_render_cache_invalidates_on_centroid_rewrite(spark):
-    """r12: lifecycle verbs memoize the rendered argmin literal per
-    (centroids table, file signature).  The key MUST change whenever
-    the table content can — a retrain rewrites the parquet part files,
-    so a post-retrain append assigns against the NEW centroids, never
-    a stale cached literal; and a cache hit is bit-identical to a
-    fresh collect (same rows, same sorted render)."""
+def test_append_after_retrain_assigns_against_current_centroids(spark):
+    """An append reads the index's centroids table at call time: after
+    a retrain rewrites it, a post-retrain append assigns every delta
+    row against the NEW centroids — exactly the assignment a fresh
+    kernel call against the current table gives — never against the
+    seed build's."""
     v = S._vectors(spark, SF).select("vec_id", "embedding")
     is_delta = F.col("vec_id") % S.INCR_SPLIT_MOD == S.INCR_DELTA_REM
     seed, delta = v.filter(~is_delta), v.filter(is_delta)
     name = "tia_cache"
     try:
         S.build_ivf_index(spark, seed, name)
-        k1 = S._centroids_table_key(spark, name)
-        assert k1 is not None
-        # append fills the cache; a second key probe is stable
         assert S.append_to_ivf_index(spark, delta, name, batch_id=1)
-        assert S._centroids_table_key(spark, name) == k1
-        assert k1 in S._ASSIGN_RENDER_CACHE
-        # retrain rewrites the centroids table → the key MUST move
         S.retrain_ivf_index(spark, name, iters=2, n_centroids=4)
-        k2 = S._centroids_table_key(spark, name)
-        assert k2 is not None and k2 != k1
-        # post-retrain append uses the new centroids: every appended
-        # row's assignment matches a fresh argmin against the CURRENT
-        # centroid set (stale cache would keep old centroid ids)
         assert S.append_to_ivf_index(spark, delta, name, batch_id=2)
-        cur_cents = {
-            r["centroid_id"]
-            for r in spark.table(f"{name}_centroids").collect()
+        expected = {
+            r["vec_id"]: r["centroid_id"]
+            for r in S._assign_via_broadcast(
+                delta.withColumn("nrm", S._norm("embedding")),
+                spark.table(f"{name}_centroids"),
+            ).collect()
         }
         appended = spark.table(f"{name}_lists").join(
             delta.select("vec_id"), "vec_id", "left_semi"
-        )
-        assert {
-            r["centroid_id"] for r in appended.collect()
-        } <= cur_cents
+        ).collect()
+        assert appended and {
+            r["centroid_id"] for r in appended
+        } <= set(range(4))
+        assert all(r["centroid_id"] == expected[r["vec_id"]] for r in appended)
     finally:
         for s in ("_lists", "_centroids", "_batches", "_stats",
                   "_tombstones", "_deferred"):
             spark.sql(f"DROP TABLE IF EXISTS tia_cache{s}")
+
+
+def test_assignment_kernel_fails_loudly_on_empty_centroids(spark):
+    """An empty centroid set has no nearest centroid: the assignment
+    kernel must fail the job, naming the empty set, instead of
+    assigning NULL centroid ids that would silently vanish from every
+    centroid_id join downstream.  An empty corpus stays empty input:
+    empty in, empty out (the operators' totality contract)."""
+    v = S._vectors(spark, SF).select(
+        "vec_id", "embedding", S._norm("embedding").alias("nrm")
+    )
+    cent = v.limit(0).select(
+        F.col("vec_id").alias("centroid_id"),
+        F.col("embedding").alias("c_emb"),
+        F.col("nrm").alias("c_nrm"),
+    )
+    for metric in ("cosine", "l2", "ip"):
+        with pytest.raises(Exception, match="centroid frame is empty"):
+            S._assign_via_broadcast(v, cent, metric=metric).collect()
+    assert S._assign_via_broadcast(v.limit(0), cent).count() == 0
+
+
+def test_pq_encode_selects_entries_by_their_own_subspace(spark):
+    """The encode kernel reads each subspace's entries by their own
+    ``m``: rotation marker rows (``m = -1``) riding the codebook change
+    nothing, and a codebook missing a subspace raises ``ValueError``
+    naming it instead of scoring that subspace against another one's
+    entries (positional selection shifted every later subspace)."""
+    qv = S.quantize_frame(
+        spark.read.parquet(f"{SF}/embeddings.parquet").select(
+            "vec_id", "embedding"
+        )
+    )
+    cb = S._pq_modulus_codebooks(qv, S.PQ_CODEBOOK_MODULUS)
+    queries = qv.filter(F.col("vec_id") % S.QUERY_MODULUS == 0)
+    plain = _rows(S._pq_adc_search(qv, cb, queries))
+    types = dict(cb.dtypes)
+    marked = cb.unionByName(
+        S._rotation_rows(spark, [[1.0] * 64 for _ in range(2)]).select(
+            "m",
+            *[F.col(c).cast(types[c]).alias(c) for c in ("entry_id", "c_sub")],
+            "c_nrm2",
+        )
+    )
+    assert plain and _rows(S._pq_adc_search(qv, marked, queries)) == plain
+    with pytest.raises(ValueError, match="m=3"):
+        S._pq_adc_search(qv, cb.filter("m != 3"), queries)
+    # an empty codebook is empty input: vectors fail loudly, no vectors
+    # encode to nothing
+    with pytest.raises(Exception, match="codebook is empty"):
+        S._pq_encode_bcast(qv, cb.limit(0)).collect()
+    assert S._pq_encode_bcast(qv.limit(0), cb.limit(0)).count() == 0
 
 
 def test_delta_missing_probe_ignores_null_ids(spark):

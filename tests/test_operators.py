@@ -1560,6 +1560,19 @@ def test_bpe_merges_survives_fully_merged_word(spark, tmp_path):
     assert len(rows) == 6
 
 
+def test_bpe_merges_vocab_is_one_partition_at_fixture_scale(spark):
+    """The merge loop's persisted vocabulary is sized from the corpus'
+    on-disk bytes: a fixture corpus (far under 64 MB per partition)
+    gets ONE partition, not the default parallelism.  A broad
+    ``except`` around the size probe once hid a NameError there and
+    silently fell back to the wide default."""
+    from hadoop_logfile_inputformat_spark.operators import tables
+    from hadoop_logfile_inputformat_spark.operators import text as T
+
+    T.bpe_merges(spark, SF, n_merges=1).collect()
+    assert tables._QUERY_CACHE["bpe_vocab"].rdd.getNumPartitions() == 1
+
+
 def test_bpe_tokenize_applies_learned_merges(spark, tmp_path):
     """Train-then-apply round trip: fully-merged words collapse to one
     subword; uncovered words stay at char+</w> granularity."""
@@ -2137,6 +2150,25 @@ def test_kmeans_centroids_separate_clusters(spark, tmp_path):
     finally:
         for t in ("t_km_lists", "t_km_centroids"):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+def test_kmeans_cosine_tolerates_a_zero_vector(spark):
+    """Spherical k-means trains on dot / (|c| + 1e-12): a zero vector
+    ties at 0 against every centroid and joins the lowest centroid_id
+    instead of failing the iteration on a division by zero.  Here the
+    [0, 1] vectors (ids 3, 6, 9) form centroid 1; the [1, 1] and [2, 1]
+    vectors plus the zero vector average to centroid 0."""
+    rows = [(i, [float(i % 3), 1.0] if i else [0.0, 0.0]) for i in range(10)]
+    vectors = spark.createDataFrame(
+        rows, "vec_id long, embedding array<double>"
+    )
+    cents = sorted(
+        tuple(r)
+        for r in similarity.kmeans_centroids(
+            vectors, k=2, iters=2, metric="cosine"
+        ).collect()
+    )
+    assert cents == [(0, [9 / 7, 6 / 7]), (1, [0.0, 1.0])]
 
 
 def test_operators_total_on_empty_tables(spark, tmp_path):

@@ -235,33 +235,85 @@ def test_ranking_queries_have_no_global_sort_partition(spark, name):
             ), f"{name}: un-partitioned window:\n{line}"
 
 
+def _exec_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _plan_depth(line: str) -> int:
+    return len(line) - len(line.lstrip(" :+-"))
+
+
+def _assert_broadcast_row_kernel(plan: str, n_kernels: int = 1) -> list:
+    """The shared shape of the argmin kernels: the centroid/codebook
+    side arrives as ONE-row BroadcastExchanges (their subtree tops out
+    at a global aggregate, keys=[]); the corpus side below the
+    nested-loop join carries no Exchange at all; nothing is exchanged
+    on vec_id; and ``array_min`` appears exactly once per kernel, so
+    the argmin runs once per row.  Returns the lines outside the
+    broadcast subtrees."""
+    lines = plan.splitlines()
+    subtrees, rest, i = [], [], 0
+    while i < len(lines):
+        if "BroadcastExchange" in lines[i]:
+            d, j = _plan_depth(lines[i]), i + 1
+            while j < len(lines) and _plan_depth(lines[j]) > d:
+                j += 1
+            subtrees.append(lines[i:j])
+            i = j
+        else:
+            rest.append(lines[i])
+            i += 1
+    assert len(subtrees) == n_kernels, plan
+    for sub in subtrees:
+        top = next(line for line in sub[1:] if "Project" not in line)
+        assert "Aggregate(keys=[]" in top, (
+            f"broadcast side is not one row:\n{top}"
+        )
+    assert "hashpartitioning(vec_id" not in plan, plan
+    assert "HashJoin" not in plan and "SortMergeJoin" not in plan, plan
+    for k, line in enumerate(rest):
+        if "BroadcastNestedLoopJoin" in line:
+            d = _plan_depth(line)
+            below = []
+            for other in rest[k + 1:]:
+                if _plan_depth(other) <= d:
+                    break
+                below.append(other)
+            assert not any("Exchange" in b for b in below), (
+                "corpus side exchanged:\n" + "\n".join(below)
+            )
+    assert plan.count("array_min") == n_kernels, plan
+    return rest
+
+
 def test_lloyd_training_iteration_has_no_corpus_exchange(spark):
     """The Lloyd's-iteration plans (kmeans_centroids and
-    pq_codebooks_kmeans) must be pure projections over the corpus: the
-    centroid/codebook literal rides inside the expression, so the only
+    pq_codebooks_kmeans) run through the shared argmin kernels: the
+    centroids/codebook ride as one broadcast row, so the corpus is
+    never joined on a key, regrouped by vec_id or exchanged — the only
     hash exchange per iteration is the map-side-partial component-mean
-    aggregate — never a join, never a regroup of the corpus by vec_id.
-    Before this shape, every training iteration shipped the full
-    corpus (embedding payloads included) through an Exchange on
-    vec_id; at 3-5 iterations x two training loops that dominated the
-    IVFPQ lifecycle cost."""
+    aggregate.  The argmin runs once per VECTOR: one ``array_min`` in
+    the plan, in a Project below every Generate (above one, it would
+    be recomputed per exploded component — dim x redundant work)."""
     from hadoop_logfile_inputformat_spark.operators import similarity as S
 
-    v = S._vectors(spark, SF).select("vec_id", "embedding")
+    # plain scan (tables.load adds its own round-robin repartition,
+    # which would read as a false corpus exchange here)
+    v = spark.read.parquet(f"{SF}/embeddings.parquet").select(
+        "vec_id", "embedding"
+    )
     cents = [[0.0] * 64, [1.0] * 64]
     for frame in (
         S._lloyd_iteration_means(v, cents, "l2"),
         S._lloyd_iteration_means(v, cents, "cosine"),
         S._pq_lloyd_iteration_means(
-            S._pq_parts(S.quantize_frame(v)),
+            S.quantize_frame(v),
             [[[0.0] * S.PQ_SUBDIM, [1.0] * S.PQ_SUBDIM]] * S.PQ_M,
         ),
     ):
-        plan = frame._jdf.queryExecution().executedPlan().toString()
-        assert "Join" not in plan, "training iteration must not join"
-        hash_ex = [
-            l for l in plan.splitlines() if "Exchange hashpartitioning" in l
-        ]
+        plan = _exec_plan(frame)
+        rest = _assert_broadcast_row_kernel(plan)
+        hash_ex = [l for l in rest if "Exchange hashpartitioning" in l]
         assert len(hash_ex) == 1, (
             f"exactly one (group-key) exchange expected:\n{plan}"
         )
@@ -270,64 +322,52 @@ def test_lloyd_training_iteration_has_no_corpus_exchange(spark):
         )
         # and the exchange's input must already be a partial aggregate
         assert "partial_avg" in plan, "means must partial-aggregate map-side"
-        # the argmin must be computed once per VECTOR, not once per
-        # exploded component: its Project must sit below the Generate
-        lines = plan.splitlines()
-        gen = next(i for i, l in enumerate(lines) if "Generate" in l)
-        argmin = next(i for i, l in enumerate(lines) if "array_min" in l)
-        assert argmin > gen, (
+        gens = [i for i, l in enumerate(rest) if "Generate" in l]
+        argmin = next(i for i, l in enumerate(rest) if "array_min" in l)
+        assert gens and argmin > max(gens), (
             "argmin recomputed per exploded component (Project above "
-            "Generate) — dim x redundant work"
+            f"Generate):\n{plan}"
         )
 
 
 def test_fused_pq_encode_is_a_pure_projection(spark):
-    """_pq_encode_fused (the index builds'/appends' encode path) must
-    compute every vector's M codes with NO exchange and NO join: the
-    codebook rides as a SQL literal, the argmin array gets its own
-    projection BELOW the posexplode (collapsing them would recompute
-    the whole M-argmin per generated element — the Lloyd's-training
-    trap), and the only data movement left in an index build is the
-    bucketed write's own clustering."""
+    """The PQ encode kernel (builds, appends, the ADC search, codebook
+    training) computes every vector's M codes in ONE projection over
+    the corpus: the codebook arrives as a one-row broadcast, nothing
+    is exchanged on the corpus side, and the M-subspace argmin array
+    gets its own projection below the explode — a plain ``posexplode``
+    would let the optimizer push an inferred ``size(_enc) > 0`` filter
+    into the join and run the argmin twice per vector, so exactly one
+    ``array_min`` may appear."""
     from hadoop_logfile_inputformat_spark.operators import similarity as S
 
-    # plain scan (tables.load adds its own round-robin repartition,
-    # which would read as a false encode exchange here)
     v = S.quantize_frame(
         spark.read.parquet(f"{SF}/embeddings.parquet").select(
             "vec_id", "embedding"
         )
     )
     cb = S._pq_modulus_codebooks(v, 100)
-    plan = (
-        S._pq_encode_fused(v, cb)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "Join" not in plan, plan
-    assert "Exchange" not in plan, plan
-    assert "Generate" in plan, plan
-    # argmin below the Generate: the generator input is the plain
-    # array column, not the inline argmin expression re-evaluated
-    # per element
-    gen = [l for l in plan.splitlines() if "Generate" in l][0]
-    assert "array_min" not in gen, gen
+    plan = _exec_plan(S._pq_encode_bcast(v, cb, carry=("nrm",)))
+    rest = _assert_broadcast_row_kernel(plan)
+    assert not any("Exchange" in l for l in rest), plan
+    gen = [l for l in rest if "Generate" in l]
+    assert len(gen) == 1 and "array_min" not in gen[0], plan
 
 
 def test_centroid_assignment_is_a_pure_projection(spark):
-    """_assign_to_centroids (builds, appends, the oracled incremental
-    twin) must be a projection over the corpus — centroids ride as a
-    SQL literal, no join, no Exchange (the previous form regrouped the
-    whole corpus, embeddings included, through groupBy(vec_id)) — and
-    the k x dim argmin struct must evaluate ONCE per row (its alias
-    stays its own projection; a collapse would inline it into both the
-    centroid_id and c_sim outputs)."""
+    """The assignment kernel (builds, appends, the IVF twins, k-means
+    training) is a projection over the corpus under every metric: the
+    centroids arrive as a one-row broadcast, no Exchange anywhere on
+    the corpus side (the join form regrouped the whole corpus,
+    embeddings included, through groupBy(vec_id)), and the k x dim
+    argmin struct evaluates ONCE per row (its alias stays its own
+    projection; a collapse would inline it into both the centroid_id
+    and c_sim outputs)."""
     from hadoop_logfile_inputformat_spark.operators import similarity as S
 
     v = (
         spark.read.parquet(f"{SF}/embeddings.parquet")
-        .select("vec_id", "embedding")
+        .select("vec_id", "embedding", "label")
         .withColumn("nrm", F.expr(
             "sqrt(aggregate(zip_with(embedding, embedding, (x, y) ->"
             " CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
@@ -339,25 +379,23 @@ def test_centroid_assignment_is_a_pure_projection(spark):
         F.col("embedding").alias("c_emb"),
         F.col("nrm").alias("c_nrm"),
     )
-    plan = (
-        S._assign_to_centroids(v, cent)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "Join" not in plan, plan
-    assert "Exchange" not in plan, plan
-    assert plan.count("array_min") == 1, plan
+    for metric in ("cosine", "l2", "ip"):
+        plan = _exec_plan(
+            S._assign_via_broadcast(v, cent, carry=("label",), metric=metric)
+        )
+        rest = _assert_broadcast_row_kernel(plan)
+        assert not any("Exchange" in l for l in rest), plan
 
 
 def test_opq_rotation_is_a_pure_pinned_projection(spark):
-    """The OPQ rotate (r12) must add NO join and NO exchange to the
-    encode chain — the d x d matrix rides as a SQL literal projection
-    — and the rotated frame the builders feed to _pq_encode_fused is
-    PINNED (InMemoryRelation), so the d² matmul evaluates once per
-    row instead of re-inlining into every per-entry encode lambda
-    (the upstream-HOF landmine, measured 25x re-evaluation when it
-    bit the quantize pass)."""
+    """The OPQ rotate (r12) adds NO join and NO exchange to the encode
+    chain — the d x d matrix rides as a SQL literal projection — and
+    inside the encode kernel the d² matmul evaluates once per row
+    BELOW the broadcast join (never inside the per-entry argmin
+    lambdas), both for the appends' unpinned rotated frame and for the
+    builders' PINNED one (InMemoryRelation).  The kernel shape holds
+    either way: one-row codebook broadcast, no corpus exchange, one
+    ``array_min``."""
     from hadoop_logfile_inputformat_spark.operators import similarity as S
 
     v = S.quantize_frame(
@@ -367,24 +405,21 @@ def test_opq_rotation_is_a_pure_pinned_projection(spark):
     )
     R = S.learn_opq_rotation(v)
     rotated = v.withColumn("q", F.expr(S._rotate_expr("q", R)))
-    plan = rotated._jdf.queryExecution().executedPlan().toString()
+    plan = _exec_plan(rotated)
     assert "Join" not in plan, plan
     assert "Exchange" not in plan, plan
-    # the builders' pinned form: encode over the PERSISTED rotation
+    cb = S._pq_modulus_codebooks(v, 100)
+    # the rotation's own lambda variable names it in the plan
+    enc_plan = _exec_plan(S._pq_encode_bcast(rotated, cb))
+    rest = _assert_broadcast_row_kernel(enc_plan)
+    argmin = next(l for l in rest if "array_min" in l)
+    assert "lambda r#" not in argmin, argmin
+    assert any("lambda r#" in l for l in rest), enc_plan
     pinned = rotated.persist()
     try:
-        cb = S._pq_modulus_codebooks(pinned, 100)
-        enc_plan = (
-            S._pq_encode_fused(pinned, cb)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
+        enc_plan = _exec_plan(S._pq_encode_bcast(pinned, cb))
         assert "InMemoryTableScan" in enc_plan, enc_plan
-        assert "Exchange" not in enc_plan, enc_plan
-        # the rotation literal must NOT appear inside the encode plan:
-        # it is materialized behind the persist, not re-inlined into
-        # the per-entry lambdas (the scan carries plain columns)
-        assert enc_plan.count("array_min") <= S.PQ_M + 1, enc_plan
+        rest = _assert_broadcast_row_kernel(enc_plan)
+        assert not any("Exchange" in l for l in rest), enc_plan
     finally:
         pinned.unpersist(blocking=False)
